@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Eager distributed materialization — the seam behind every "compute this
   * intermediate exactly once, keep it partitioned on the cluster" site
@@ -147,7 +148,7 @@ object Materialize {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val bytes = inputBytes(df)
     if (bytes <= 0) cores
-    else math.max(4, math.min(cores,
+    else math.min(cores, math.max(4,
       ((bytes + SpreadBytesPerPart - 1) / SpreadBytesPerPart).toInt))
   }
 
@@ -158,7 +159,7 @@ object Materialize {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
       }.sum
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   private def underSplit(df: DataFrame): Boolean = {
     val s = df.sparkSession
@@ -174,12 +175,10 @@ object Materialize {
 
   private def parquetRowGroups(s: SparkSession, file: String): Int =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file),
-        s.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = graft.sources.GroupDecode.openParquet(
+        new org.apache.hadoop.fs.Path(file), s.sparkContext.hadoopConfiguration)
       try r.getFooter.getBlocks.size finally r.close()
-    } catch { case _: Throwable => Int.MaxValue } // unreadable ⇒ do not rebalance
+    } catch { case NonFatal(_) => Int.MaxValue } // unreadable ⇒ do not rebalance
 
   // Lazily-shared frames (persist, no action) — drained by releaseTransient.
   private val sharedFrames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()

@@ -1083,8 +1083,6 @@ final case class GraftTailProjectFactory(inner: PartitionReaderFactory,
   * whole files on this path). Clean scans take [[GraftVectorReader]]. */
 final class GraftRowReader(p: GraftInputPartition)
     extends PartitionReader[InternalRow] {
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
   import org.apache.parquet.io.ColumnIOFactory
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -1096,9 +1094,8 @@ final class GraftRowReader(p: GraftInputPartition)
       f.metadata.getString("delta.columnMapping.physicalName")
     else f.name
   }
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-    new org.apache.hadoop.fs.Path(p.path),
-    GroupDecode.freshConf()))
+  private val reader = GroupDecode.openParquet(
+    new org.apache.hadoop.fs.Path(p.path), GroupDecode.freshConf())
   private val fileSchema = reader.getFooter.getFileMetaData.getSchema
   // project the file read to the requested columns that exist in the file
   private val wanted = physNames.filter(fileSchema.containsField)

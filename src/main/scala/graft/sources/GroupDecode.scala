@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * one-level ARRAY over any of those (standard 3-level parquet lists plus
   * the legacy 2-level shapes), plus the narrow-file up-conversions type
   * widening leaves behind (INT32→long, FLOAT→double). */
-private[sources] object GroupDecode {
+private[graft] object GroupDecode {
 
   /** One parsed Hadoop configuration per JVM (core-default/core-site XML
     * parse is milliseconds); every reader takes a cheap COPY — at
@@ -26,6 +26,17 @@ private[sources] object GroupDecode {
   private lazy val baseConf = new org.apache.hadoop.conf.Configuration()
   private[sources] def freshConf(): org.apache.hadoop.conf.Configuration =
     new org.apache.hadoop.conf.Configuration(baseConf)
+
+  /** Open a parquet file with its read options taken from `conf`. The
+    * one-argument `ParquetFileReader.open` builds them from a fresh
+    * `new Configuration()`, which re-parses the Hadoop XML on every open
+    * (~9 ms, against ~0.25 ms for a copy of a loaded one). */
+  private[graft] def openParquet(path: org.apache.hadoop.fs.Path,
+                                 conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
 
 
   /** Fail a scan at FILE-OPEN time (not mid-decode) when a file declares a

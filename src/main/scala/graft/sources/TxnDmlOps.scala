@@ -50,7 +50,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
           // candidate file was re-read to rewrite the touched subset
           val byFile = candidates.map(a => (a.file, a)).toMap
           val inTouched = readFilesTagged(spark, root,
-            touched.map(byFile), v - 1)
+            addsOf(root, byFile, touched), v - 1)
           val carried = inTouched
             .filter(!coalesce(pred, lit(false)))
             .drop("_file")
@@ -245,7 +245,7 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
           // touched-only rewrite read — see [[delete]] (round 19)
           val byFile = candidates.map(a => (a.file, a)).toMap
           val inTouched = readFilesTagged(spark, root,
-            touched.map(byFile), v - 1)
+            addsOf(root, byFile, touched), v - 1)
             .drop("_file")
           val hit = coalesce(pred, lit(false))
           val updated = applySet(inTouched.filter(hit), schema, set)
@@ -333,14 +333,14 @@ private[sources] trait TxnDmlOps { self: TxnTable.type =>
           val touchedAll = perFile.map(_._1)
           // touched-only rewrite reads — see [[delete]] (round 19)
           val inTouched = readFilesTagged(spark, root,
-            touchedAll.map(byFile), v - 1)
+            addsOf(root, byFile, touchedAll), v - 1)
             .drop("_file")
           val updated = applySet(inTouched.filter(hit), schema, set)
           validateConstraints(updated, root)
           val carried = {
             val cowFiles = cowSide.map(_._1)
             if (cowFiles.isEmpty) updated
-            else readFilesTagged(spark, root, cowFiles.map(byFile), v - 1)
+            else readFilesTagged(spark, root, addsOf(root, byFile, cowFiles), v - 1)
               .filter(!hit).drop("_file").unionByName(updated)
           }
           val cdcAdds =

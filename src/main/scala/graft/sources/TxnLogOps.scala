@@ -812,11 +812,8 @@ private[sources] trait TxnLogOps { self: TxnTable.type =>
     * needs. A column any row group lacks stats for is left out (= never
     * pruned on); numRecords is always exact. */
   private[sources] def footerStats(p: Path, schema: StructType): String = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri),
-      GroupDecode.freshConf()))
+    val rd = GroupDecode.openParquet(new org.apache.hadoop.fs.Path(p.toUri),
+      GroupDecode.freshConf())
     try {
       val blocks = rd.getFooter.getBlocks.asScala.toSeq
       val numRecords = blocks.map(_.getRowCount).sum

@@ -277,7 +277,7 @@ private[sources] object MergeMulti {
       // fire on matched rows and see no source columns by contract).
       val needDedup = matched.isEmpty && !imagesOnly
       val inT = padEvolved(readFilesTagged(spark, root,
-        files.map(byFile), v - 1, rowIndex = needDedup))
+        addsOf(root, byFile, files), v - 1, rowIndex = needDedup))
         .withColumn("_tp", lit(true)).alias(targetAlias)
       val jb = inT.join(src, condition, "left_outer")
       val m = when(sp, mIdx).otherwise(lit(-1))

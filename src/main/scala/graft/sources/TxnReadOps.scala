@@ -26,13 +26,10 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     require(last >= 0, s"$root is not a TxnTable (no _txn_log)")
     require(asOf <= last, s"version $asOf does not exist (latest $last)")
     val adds = liveAdds(root, asOf)
-    val missing = adds.filterNot(a => Files.exists(filePath(root, a.file)))
-    require(missing.isEmpty,
-      s"version ${if (asOf < 0) last else asOf} references vacuumed files: " +
-        missing.map(_.file).mkString(", "))
     // every commit adds at least one part file (Spark writes schema-bearing
     // empty parts), so a resolvable version always has files
     require(adds.nonEmpty, s"no live files at version $asOf")
+    // a vacuumed file fails the scan's own stat (see [[scanFiles]])
     readFiles(spark, root, adds, asOf)
   }
 
@@ -150,6 +147,14 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
   private[sources] def dvTombstones(adds: Seq[AddFile]): Map[String, DeletionVectors.DvDescriptor] =
     adds.flatMap(a => a.dv.map(a.file -> _)).toMap
 
+  /** The candidate adds a rewrite touched, looked up by file. A miss means
+    * the rewrite touched a file its candidate set does not hold — an
+    * engine invariant breach — and fails naming the file and the table. */
+  private[sources] def addsOf(root: String, byFile: Map[String, AddFile],
+                              files: Seq[String]): Seq[AddFile] =
+    files.map(f => byFile.getOrElse(f, throw new IllegalStateException(
+      s"$root: touched file $f is not among the rewrite's candidate files")))
+
   /** The hive-layout scan group of a log entry: its `data/<vN-uuid>`
     * version directory, resolved against whichever root the path lives
     * under — the table's own for relative entries, the SOURCE's for a
@@ -212,7 +217,6 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     // (its probe yields zero rows but the scan stays schema-correct)
     val kept = adds0.filterNot(fullyDeleted)
     val adds = if (kept.nonEmpty) kept else adds0.take(1)
-    val files = adds.map(_.file)
     val alive = dvAliveFilter(spark, root, adds)
     def dvf(df: DataFrame): DataFrame = alive.map(df.filter).getOrElse(df)
     readMeta(root, asOf) match {
@@ -221,11 +225,9 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
         // never rename — their name IS the directory encoding)
         val phys = StructType(schema.fields.map(f =>
           f.copy(name = physicalName(f))))
-        files.groupBy(versionDirOf(root, _)).toSeq.sortBy(_._1)
-          .map { case (vDir, fs) =>
-            dvf(spark.read.schema(phys)
-              .option("basePath", vDir)
-              .parquet(fs.map(f => filePath(root, f).toString): _*))
+        adds.groupBy(a => versionDirOf(root, a.file)).toSeq.sortBy(_._1)
+          .map { case (vDir, group) =>
+            dvf(scanFiles(spark, root, group, Some(phys), Some(vDir)))
               .select(schema.fields.toSeq.map(f =>
                 col(physicalName(f)).as(f.name)): _*)
           }.reduce(_ unionByName _)
@@ -236,14 +238,63 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
         // the logical ones — still one scan, zero extra I/O.
         val phys = StructType(schema.fields.map(f =>
           f.copy(name = physicalName(f), nullable = true)))
-        val scan = dvf(spark.read.schema(phys)
-          .parquet(files.map(f => filePath(root, f).toString): _*))
+        val scan = dvf(scanFiles(spark, root, adds, Some(phys)))
         if (colMapping(schema).isEmpty) scan
         else scan.select(schema.fields.toSeq.map(f =>
           col(physicalName(f)).as(f.name)): _*)
       case None =>
-        dvf(spark.read.parquet(files.map(f => filePath(root, f).toString): _*))
+        dvf(scanFiles(spark, root, adds, None))
     }
+  }
+
+  /** The parquet scan of log-listed files, planned from the log alone: its
+    * file index answers from each add's logged size, plus one
+    * `readAttributes` per file for the mtime (which also proves the file
+    * is still there), so building the read never lists a directory, never
+    * stats through Hadoop and never starts a job. (`spark.read.parquet`
+    * re-stats every path and, past 32 paths, lists them in a distributed
+    * job on every read.) `basePath` — a partitioned group's version
+    * directory — re-attaches the path-encoded partition columns; with no
+    * `schema` the files' own is inferred, as `spark.read` would. */
+  private[sources] def scanFiles(spark: SparkSession, root: String, adds: Seq[AddFile],
+                                 schema: Option[StructType],
+                                 basePath: Option[String] = None): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val blockSize = fs.getDefaultBlockSize(new HPath("/"))
+    val found = adds.map { a =>
+      val p = filePath(root, a.file).toAbsolutePath
+      try Right(new FileStatus(a.bytes, false, 1, blockSize,
+        Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+          .lastModifiedTime.toMillis,
+        fs.makeQualified(new HPath(p.toString))))
+      catch { case _: java.nio.file.NoSuchFileException => Left(a.file) }
+    }
+    val missing = found.collect { case Left(f) => f }
+    require(missing.isEmpty,
+      s"$root references vacuumed files: ${missing.mkString(", ")}")
+    val statuses = found.collect { case Right(s) => s }
+    val leaves = statuses.map(s => s.getPath -> Array(s)).toMap
+    val logged = new FileStatusCache {
+      override def getLeafFiles(path: HPath): Option[Array[FileStatus]] = leaves.get(path)
+      override def putLeafFiles(path: HPath, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = basePath.map("basePath" -> _).toMap
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), options,
+      schema, logged, None, None)
+    val format = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    // the data/partition split DataSource makes for a user schema
+    val partSchema = index.partitionSchema
+    val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+    val dataSchema = schema
+      .map(s => StructType(s.filterNot(f => partSchema.exists(p => resolver(p.name, f.name)))))
+      .orElse(format.inferSchema(spark, options, index.allFiles()))
+      .getOrElse(sys.error(s"$root: no schema to read ${adds.map(_.file).mkString(", ")}"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      org.apache.spark.sql.GraftColumnExpr.asNullable(dataSchema), None, format,
+      options)(spark))
   }
 
   // ---- row tracking (stable row ids) ------------------------------------------
@@ -331,17 +382,13 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
       col("_metadata.row_index").as("_rix"))
     val scanned =
       if (pcs.nonEmpty)
-        adds.map(_.file).groupBy(versionDirOf(root, _)).toSeq.sortBy(_._1)
-          .map { case (vDir, fs) =>
-            dvf(spark.read.schema(phys)
-              .option("basePath", vDir)
-              .parquet(fs.map(f => filePath(root, f).toString): _*))
+        adds.groupBy(a => versionDirOf(root, a.file)).toSeq.sortBy(_._1)
+          .map { case (vDir, group) =>
+            dvf(scanFiles(spark, root, group, Some(phys), Some(vDir)))
               .select(sel: _*)
           }.reduce(_ unionByName _)
       else
-        dvf(spark.read.schema(phys)
-          .parquet(adds.map(f => filePath(root, f.file).toString): _*))
-          .select(sel: _*)
+        dvf(scanFiles(spark, root, adds, Some(phys))).select(sel: _*)
     // per-file fresh-id base, broadcast — O(files) rows, never data-sized
     val baseDf = adds.map(a =>
       (fileNameOf(a.file), a.baseRowId.getOrElse(-1L))).toDF("_fn2", "_base")
@@ -364,7 +411,6 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
                               rowIndex: Boolean = false): DataFrame = {
     val kept = adds0.filterNot(fullyDeleted)
     val adds = if (kept.nonEmpty) kept else adds0.take(1)
-    val files = adds.map(_.file)
     val alive = dvAliveFilter(spark, root, adds)
     def dvf(df: DataFrame): DataFrame = alive.map(df.filter).getOrElse(df)
     val rootAbs = Paths.get(root).toAbsolutePath.toString
@@ -381,23 +427,20 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
       case Some((schema, pcs)) if pcs.nonEmpty =>
         val phys = StructType(schema.fields.map(f =>
           f.copy(name = physicalName(f))))
-        files.groupBy(versionDirOf(root, _)).toSeq.sortBy(_._1)
-          .map { case (vDir, fs) =>
-            dvf(spark.read.schema(phys)
-              .option("basePath", vDir)
-              .parquet(fs.map(f => filePath(root, f).toString): _*))
+        adds.groupBy(a => versionDirOf(root, a.file)).toSeq.sortBy(_._1)
+          .map { case (vDir, group) =>
+            dvf(scanFiles(spark, root, group, Some(phys), Some(vDir)))
               .select(schema.fields.toSeq.map(f =>
                 col(physicalName(f)).as(f.name)) ++ extra: _*)
           }.reduce(_ unionByName _)
       case Some((schema, _)) =>
         val phys = StructType(schema.fields.map(f =>
           f.copy(name = physicalName(f), nullable = true)))
-        dvf(spark.read.schema(phys)
-          .parquet(files.map(f => filePath(root, f).toString): _*))
+        dvf(scanFiles(spark, root, adds, Some(phys)))
           .select(schema.fields.toSeq.map(f =>
             col(physicalName(f)).as(f.name)) ++ extra: _*)
       case None =>
-        dvf(spark.read.parquet(files.map(f => filePath(root, f).toString): _*))
+        dvf(scanFiles(spark, root, adds, None))
           .select(col("*") +: extra: _*)
     }
   }
@@ -538,7 +581,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
     val perVersion = versions(root).filter(v => v > fromV && v <= toV).flatMap { v =>
       val acts = parseLog(root, v)
       val op = acts.headOption.map(_.op).getOrElse("?")
-      val cdcFiles = acts.collect { case Action(_, _, "cdc", a) => a.file }
+      val cdcFiles = acts.collect { case Action(_, _, "cdc", a) => a }
       val addFiles = acts.collect { case Action(_, _, "add", a) => a }
       val hasRemove = acts.exists(_.action == "remove")
       val layoutOnly = op == "optimize" || op == "optimize-zorder" ||
@@ -549,8 +592,7 @@ private[sources] trait TxnReadOps { self: TxnTable.type =>
       val frame: Option[DataFrame] =
       if (layoutOnly || acts.isEmpty) None
       else if (cdcFiles.nonEmpty)
-        Some(tagged(physToRangeEnd(
-          spark.read.parquet(cdcFiles.map(f => filePath(root, f).toString): _*))
+        Some(tagged(physToRangeEnd(scanFiles(spark, root, cdcFiles, None))
             .withColumn("_commit_version", lit(v)), "cdf"))
       else if (op == "delete-dv")
         // a merge-on-read delete needs NO stored change files: the rows it

@@ -228,8 +228,6 @@ final case class TxnTailPartition(path: String, version: Long,
   * scan inside the reader, columns projected by the table schema. */
 final class TxnTailReader(p: TxnTailPartition)
     extends PartitionReader[InternalRow] {
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
   import org.apache.parquet.io.ColumnIOFactory
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -245,9 +243,8 @@ final class TxnTailReader(p: TxnTailPartition)
       f.metadata.getString("delta.columnMapping.physicalName")
     else f.name
   }
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-    new org.apache.hadoop.fs.Path(p.path),
-    GroupDecode.freshConf()))
+  private val reader = GroupDecode.openParquet(
+    new org.apache.hadoop.fs.Path(p.path), GroupDecode.freshConf())
   private val fileSchema = reader.getFooter.getFileMetaData.getSchema
   schema.fields.zip(physNames).foreach { case (f, pn) =>
     GroupDecode.checkDecimalScale(fileSchema, pn, f.dataType, p.path) }

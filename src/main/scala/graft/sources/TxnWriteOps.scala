@@ -566,7 +566,7 @@ private[sources] trait TxnWriteOps { self: TxnTable.type =>
     }
     // touched-only rewrite reads (round 19) — see [[merge]]
     def touchedStructDv(files: Seq[String], as: String) =
-      readFilesTagged(spark, root, files.map(byFile), v - 1)
+      readFilesTagged(spark, root, addsOf(root, byFile, files), v - 1)
         .select(struct(cols.map(col): _*).as(as))
     val cowFiles = cowSide.map(_._1)
     val carried =

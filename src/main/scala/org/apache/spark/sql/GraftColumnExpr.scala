@@ -30,4 +30,10 @@ object GraftColumnExpr {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field and nested element nullable — the shape a
+    * file source's data schema takes (`StructType.asNullable`, scoped
+    * `private[spark]`); TxnTable's log-listed scan builds its relation
+    * the way `DataSource` does. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }
